@@ -3,7 +3,9 @@ package graft.catalog
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -1390,6 +1392,22 @@ class VecDB(spark: SparkSession, root: String) {
   def searchBatch(key: String, queries: DataFrame, k: Int,
       ef: Option[Int] = None, upperBound: Option[Double] = None,
       pattern: Map[String, String] = Map.empty): DataFrame = {
+    val (filtered, serveable, hits) =
+      dispatch(key, queries, k, ef, upperBound, pattern)
+    attachMeta(filtered, hits, pointLookup = serveable)
+  }
+
+  /** [[searchBatch]] without the metadata attach: the arm's
+    * (query_id, id, distance) hits, for callers that only need winner ids
+    * (the SQL top-k rewrite). */
+  private[graft] def searchHits(key: String, queries: DataFrame, k: Int,
+      ef: Option[Int] = None): DataFrame =
+    dispatch(key, queries, k, ef, None, Map.empty)._3
+
+  /** The dispatch matrix: (pattern-filtered table, serving regime, hits). */
+  private def dispatch(key: String, queries: DataFrame, k: Int,
+      ef: Option[Int], upperBound: Option[Double],
+      pattern: Map[String, String]): (DataFrame, Boolean, DataFrame) = {
     // lock-free on the healthy path (a search must not block behind a
     // long-running build/ingest holding the table lock); only when a
     // sidecar is actually missing, heal under tableLock → catalogLock
@@ -1672,7 +1690,7 @@ class VecDB(spark: SparkSession, root: String) {
           Knn.exact(filtered, queries, k, e.dist, upperBound = ub)
         }
     }
-    attachMeta(filtered, hits, pointLookup = serveable)
+    (filtered, serveable, hits)
   }
 
   /** Output schema of [[searchBatch]]. */
@@ -1683,15 +1701,20 @@ class VecDB(spark: SparkSession, root: String) {
     StructField("meta", MapType(StringType, StringType), nullable = true)))
 
   /** J2 — metadata attach. Serving regime: the winner set (≤ Q·k rows) is
-    * already driver-sized, so collect it and push the winner ids INTO the
-    * table scan as an `id IN (...)` filter — parquet row-group pruning
-    * makes this an O(hits) point lookup (the reference's positional
-    * `metadata_vec_table.rs:210-211` lookup, re-expressed for a columnar
-    * store), where the old broadcast-join shape re-scanned the whole table
-    * per batch. Beyond [[MetaLookupMaxIds]] distinct winners (or outside
-    * the serving regime) a plain distributed join serves instead — at that
-    * scale the scan amortizes over the batch and the driver must not hold
-    * the winner set. */
+    * already driver-sized, so collect it and run ONE eager lookup with the
+    * winner ids pushed INTO the table scan as an `id IN (...)` filter —
+    * parquet row-group pruning makes this an O(hits) point lookup (the
+    * reference's positional `metadata_vec_table.rs:210-211` lookup,
+    * re-expressed for a columnar store). The ≤ ids meta rows are left-joined
+    * to the hits on the driver (hit order kept; a hit without a row gets
+    * null meta) and returned as a local frame, so the caller's `collect()`
+    * starts no job. The predicate is a long-typed `InSet`: it points at a
+    * set object instead of embedding one literal per id (what a small `In`
+    * does), so its generated code is the same for every winner set and a
+    * request pays no compile. Beyond [[MetaLookupMaxIds]] distinct winners
+    * (or outside the serving regime) a plain distributed join serves
+    * instead — at that scale the scan amortizes over the batch and the
+    * driver must not hold the winner set. */
   private def attachMeta(filtered: DataFrame, hits: DataFrame,
       pointLookup: Boolean): DataFrame = {
     lazy val joined = filtered.select(col("id"), col("meta"))
@@ -1702,20 +1725,21 @@ class VecDB(spark: SparkSession, root: String) {
       val rows = hits.select(col("query_id").cast("long"),
         col("id").cast("long"), col("distance").cast("double")).collect()
       val ids = rows.map(_.getLong(1)).distinct
-      if (rows.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[Row](), searchOutSchema)
-      else if (ids.length > VecDB.MetaLookupMaxIds)
-        joined
+      if (ids.length > VecDB.MetaLookupMaxIds) joined
       else {
-        val hitsLocal = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), StructType(searchOutSchema.take(3)))
-        val meta = filtered
-          .filter(col("id").isInCollection(ids.map(Long.box).toSeq))
-          .select(col("id"), col("meta"))
-        // broadcast the looked-up meta rows (≤ ids, tiny): a left join can
-        // only build its right side
-        hitsLocal.join(broadcast(meta), Seq("id"), "left")
-          .select(col("query_id"), col("id"), col("distance"), col("meta"))
+        val meta =
+          if (ids.isEmpty) Map.empty[Long, Array[Any]]
+          else filtered
+            .filter(ColumnShim.column(
+              InSet(ColumnShim.expression(col("id")), ids.toSet[Any])))
+            .select(col("id"), col("meta"))
+            .collect()
+            .groupMap(_.getLong(0))(_.get(1))
+        val out = rows.flatMap { h =>
+          meta.getOrElse(h.getLong(1), Array[Any](null))
+            .map(m => Row(h.get(0), h.get(1), h.get(2), m))
+        }
+        spark.createDataFrame(java.util.Arrays.asList(out: _*), searchOutSchema)
       }
     }
   }
@@ -1774,9 +1798,13 @@ class VecDB(spark: SparkSession, root: String) {
       upperBound: Option[Double] = None): Seq[(Map[String, String], Double)] = {
     import spark.implicits._
     val q = Seq((0L, query)).toDF("query_id", "query_vec")
+    // ≤ k rows: sort on the driver (Spark's double order: -0.0 == 0.0)
     searchBatch(key, q, k, ef, upperBound)
-      .orderBy("distance", "id")
       .collect()
+      .sortWith { (a, b) =>
+        val (da, db) = (a.getAs[Double]("distance"), b.getAs[Double]("distance"))
+        if (da != db) da < db else a.getAs[Long]("id") < b.getAs[Long]("id")
+      }
       .map(r => (Option(r.getAs[Map[String, String]]("meta")).getOrElse(Map.empty),
         r.getAs[Double]("distance")))
       .toSeq

@@ -101,8 +101,9 @@ case class TopKEf(child: Expression, efExpr: Expression)
   *    `ORDER BY … LIMIT` it replaces (ties broken (distance, id)), so it
   *    is safe by default and DuckDB-oracle-able (`q_sql_topk`).
   *  - [[GraftSqlTopK.registerTable]]: a [[graft.catalog.VecDB]] table; the
-  *    rewrite dispatches through [[VecDB.searchBatch]] — HNSW/IVF/PQ index
-  *    arms engage per the catalog's dispatch matrix. Search beam: a
+  *    rewrite dispatches through [[VecDB.searchHits]] — HNSW/IVF/PQ index
+  *    arms engage per the catalog's dispatch matrix, without the metadata
+  *    attach (only winner ids are needed). Search beam: a
   *    [[TopKEf]] hint on the sort key wins, else the session conf
   *    `graft.sql.topk.ef`, else the table's default dispatch.
   *
@@ -199,18 +200,18 @@ object GraftSqlTopK {
   }
 
   /** Register a catalog table; rewrites dispatch through
-    * [[VecDB.searchBatch]] (index arms engage; [[TopKEf]] hint else
+    * [[VecDB.searchHits]] (index arms engage; [[TopKEf]] hint else
     * `graft.sql.topk.ef`). */
   def registerTable(name: String, db: VecDB, key: String): Unit = {
     def efOf(spark: SparkSession, hint: Option[Int]): Option[Int] =
       hint.orElse(spark.conf.getOption(EfConf).map(_.toInt))
     registry(name) = mkEntry(db.table(key), db.getDist(key),
       (spark, q, k, hint) => {
-        db.searchBatch(key, queryDf(spark, q), k, ef = efOf(spark, hint))
+        db.searchHits(key, queryDf(spark, q), k, ef = efOf(spark, hint))
           .select("id").collect().map(_.getLong(0))
       },
       (spark, qdf, k, hint) =>
-        db.searchBatch(key, qdf, k, ef = efOf(spark, hint)))
+        db.searchHits(key, qdf, k, ef = efOf(spark, hint)))
   }
 
   def unregister(name: String): Unit = registry.remove(name)
@@ -546,7 +547,7 @@ object GraftSqlTopK {
       val qdf = spark.createDataFrame(
         java.util.Arrays.asList(taken: _*), schema)
       val ids = e.searchBatch(spark, qdf, k, efHint)
-        .select("id").distinct().collect().map(_.getLong(0))
+        .select("id").collect().map(_.getLong(0)).distinct
       if (ids.isEmpty) return None
       lastFired = Some(("batch", efHint))
       // splice the union prune above the vector leaf (reference identity:
@@ -582,14 +583,17 @@ object GraftSqlTopK {
 
     /** `idExpr IN (ids…)`, unwrapping a widening int→long cast so the
       * predicate lands on the bare column and reaches the parquet scan
-      * (the ids came from the table, so they fit the narrow type). */
+      * (the ids came from the table, so they fit the narrow type). An
+      * `InSet`, not an `In`: a long-typed `InSet` points its generated code
+      * at a set object, where a short `In` embeds one literal per id and
+      * compiles new code for every winner set. */
     private def idIn(idExpr: Expression, ids: Array[Long]): Expression =
       idExpr match {
         case Cast(a: AttributeReference, LongType, _, _)
             if a.dataType == IntegerType =>
-          In(a, ids.toIndexedSeq.map(i => Literal(i.toInt)))
+          InSet(a, ids.map(_.toInt).toSet[Any])
         case ex =>
-          In(ex, ids.toIndexedSeq.map(Literal(_)))
+          InSet(ex, ids.toSet[Any])
       }
 
     /** Fold the query-vector expression; None (→ no rewrite) on a null

@@ -1,7 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBusShim
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.catalog.VecDB
 
 /** Catalog/CRUD lifecycle — ports `/root/reference/examples/test_pyo3.py`
@@ -987,29 +996,96 @@ class CatalogSpec extends SparkTestBase {
       s"recreated table served stale results: $afterHits")
   }
 
-  test("serving metadata attach is a pushed id point-lookup, not a full scan") {
-    import spark.implicits._
+  /** A 50-row d4 HNSW table whose rows carry meta `i` = their index. */
+  private def metaFixture(): (VecDB, IndexedSeq[Array[Float]]) = {
     val db = freshDb()
     db.createTableIfNotExists("t", 4, "l2sqr")
     val rnd = new scala.util.Random(41)
     val vecs = (0 until 50).map(_ => Array.fill(4)(rnd.nextFloat()))
     db.batchAdd("t", vecs, vecs.indices.map(i => Map("i" -> i.toString)))
     db.buildHnswIndex("t")
-    val queries = vecs.take(3).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }.toDF("query_id", "query_vec")
-    val out = db.searchBatch("t", queries, k = 4, ef = Some(200))
+    (db, vecs)
+  }
+
+  private def queriesOf(vs: Seq[Array[Float]]): DataFrame = {
+    import spark.implicits._
+    vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("query_id", "query_vec")
+  }
+
+  test("serving metadata attach is a pushed id point-lookup, not a full scan") {
+    val (db, vecs) = metaFixture()
+    val queries = queriesOf(vecs.take(3))
+    // the lookup runs eagerly inside searchBatch: capture the executed plans
+    // of every query it starts
+    val plans = new ConcurrentLinkedQueue[String]()
+    val planListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusShim.drain(spark.sparkContext)
+    spark.listenerManager.register(planListener)
+    val out = try {
+      val o = db.searchBatch("t", queries, k = 4, ef = Some(200))
+      ListenerBusShim.drain(spark.sparkContext)
+      o
+    } finally spark.listenerManager.unregister(planListener)
+    // the result is assembled on the driver: collecting it starts no job
+    val jobs = new AtomicInteger
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    val got = try {
+      val g = out.collect()
+      ListenerBusShim.drain(spark.sparkContext)
+      g
+    } finally spark.sparkContext.removeSparkListener(jobListener)
+    assert(jobs.get == 0, s"collecting the serving result started ${jobs.get} jobs")
     // correctness: every hit carries its row's metadata
-    val got = out.select(col("query_id"), col("id"),
-        col("meta")("i").as("i")).collect()
     assert(got.length == 12)
-    got.foreach(r => assert(r.getString(2) == r.getLong(1).toString))
+    got.foreach(r => assert(
+      r.getAs[scala.collection.Map[String, String]]("meta")("i") ==
+        r.getAs[Long]("id").toString))
     // plan: the meta scan must carry a pushed id filter (row-group pruned
-    // point lookup), not a full-table scan per serving batch (the plan is
-    // AQE-wrapped, so assert on the final physical plan's scan description)
-    val planStr = out.queryExecution.executedPlan.toString
+    // point lookup), not a full-table scan per serving batch
+    val planStr = plans.asScala.mkString("\n---\n")
     assert(planStr.contains("PushedFilters: [In(id") ||
       planStr.contains("PushedFilters: [IsNotNull(id), In(id"),
       s"meta scan has no pushed id filter:\n$planStr")
+  }
+
+  test("serving searches with different winner sets compile no new code") {
+    val (db, vecs) = metaFixture()
+    def serve(i: Int): Set[Long] =
+      db.searchBatch("t", queriesOf(Seq(vecs(i))), k = 4, ef = Some(200))
+        .collect().map(_.getAs[Long]("id")).toSet
+    (0 until 3).foreach(serve) // warm-up: the codegen cache fills here
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val winners = (10 until 16).map(serve)
+    assert(winners.distinct.size > 1, "fixture broke: winner sets must differ")
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "a serving search compiled new code")
+  }
+
+  test("past the meta lookup id ceiling the distributed join returns the same rows") {
+    val (db, vecs) = metaFixture()
+    val queries = queriesOf(vecs.take(3))
+    def ordered(rs: Array[Row]): Seq[Row] = rs.toSeq.sortBy(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Double]("distance"), r.getAs[Long]("id")))
+    val lookup = db.searchBatch("t", queries, k = 4, ef = Some(200)).collect()
+    assert(lookup.length == 12 && lookup.toSeq == ordered(lookup),
+      "point lookup must keep the ascending (distance, id) hit order")
+    val prop = "graft.meta.lookup.max.ids"
+    val prev = sys.props.get(prop)
+    sys.props(prop) = "2" // below the winner count: the join branch serves
+    val viaJoin = try db.searchBatch("t", queries, k = 4, ef = Some(200)).collect()
+    finally prev match {
+      case Some(v) => sys.props(prop) = v
+      case None => sys.props.remove(prop)
+    }
+    assert(ordered(viaJoin) == lookup.toSeq)
   }
 
   test("concurrent creates with colliding sanitized names never cross-delete data") {
